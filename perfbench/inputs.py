@@ -8,9 +8,10 @@ are the repository's own fixture generators
 ``tools.gen_scale_fixture.gen_documents`` / ``gen_embeddings``); this module
 only fixes sizes and writes the files.
 
-Each input set is written once per (workload, seed, scale) into the work
-directory and reused by later runs with the same seed; delete
-``.perfbench/inputs`` after changing a size or a generator.
+Each input set is written once per (workload, seed, scale, sizes) into the
+work directory and reused by later runs with the same seed; the sizes are
+part of the directory name, so a size change never reuses old inputs.
+Delete ``.perfbench/inputs`` after changing a generator.
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ from tools.gen_scale_fixture import gen_documents, gen_embeddings
 from tools.wastewater_fixture import generate_wastewater
 
 #: Row counts of the timed inputs and of the smaller warm-up inputs.
-WW_ROWS = {"timed": 2000, "warm": 400}
+WW_ROWS = {"timed": (2000,), "warm": (400,)}
 CORPUS_ROWS = {"timed": (400, 400), "warm": (120, 120)}  # (documents, vectors)
 
 #: Distinct streams per scale so warm-up inputs never equal timed inputs.
@@ -38,7 +39,8 @@ def _rng(seed: int, scale: str) -> np.random.Generator:
 
 
 def write_wastewater(out_dir: str, seed: int, scale: str) -> None:
-    df = generate_wastewater(WW_ROWS[scale], int(_rng(seed, scale).integers(2**31)))
+    (n_rows,) = WW_ROWS[scale]
+    df = generate_wastewater(n_rows, int(_rng(seed, scale).integers(2**31)))
     df.to_csv(os.path.join(out_dir, "wastewater_samples.csv"), index=False)
     df.to_parquet(os.path.join(out_dir, "wastewater_samples.parquet"), index=False)
 
@@ -51,13 +53,15 @@ def write_corpus(out_dir: str, seed: int, scale: str) -> None:
 
 
 WRITERS = {"ww_pipeline": write_wastewater, "catalog_corpus": write_corpus}
+SIZES = {"ww_pipeline": WW_ROWS, "catalog_corpus": CORPUS_ROWS}
 
 
 def ensure_inputs(work_dir: str, workload: str, seed: int, scale: str) -> str:
     """Directory holding ``workload``'s inputs for ``seed`` at ``scale``;
     generated on first use.  A marker file is written last, so a run that
     died mid-write regenerates instead of reading a partial set."""
-    out = os.path.join(work_dir, "inputs", workload, f"seed{seed}", scale)
+    sizes = "x".join(map(str, SIZES[workload][scale]))
+    out = os.path.join(work_dir, "inputs", workload, f"seed{seed}", f"{scale}-{sizes}")
     if os.path.exists(os.path.join(out, ".done")):
         return out
     shutil.rmtree(out, ignore_errors=True)

@@ -2,18 +2,18 @@
 
 Usage (from the repository root):
 
-    python3 perfbench/run.py --workload ww_pipeline --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload ww_pipeline --seed 1 --seconds 10 --trace 0
 
 One run:
 
 1. generates the workload's inputs from ``--seed`` (once per seed) under
    ``.perfbench/`` in the repository root;
-2. sets up ``SETUP_REPS`` times — ``session.get_spark`` plus the workload's
-   warm-up on a small seeded input — stopping the session in between; the
-   first set-up also starts the JVM;
+2. sets up ``SETUP_REPS`` times — a new JVM, ``session.get_spark`` and the
+   workload's warm-up on a small seeded input — stopping the JVM in
+   between, so each set-up is what a fresh process pays;
 3. runs timed passes over the workload, one operation at a time (a closed
-   loop with one client), starting passes until ``--seconds`` have passed
-   and the workload's minimum number of passes ran; with ``--trace 1``
+   loop with one client): the workload's cold passes, then steady passes
+   until they add up to ``--seconds`` (at least one); with ``--trace 1``
    every pass is traced;
 4. checks every operation's output once, outside the timed passes;
 5. prints one JSON line: ``correct``, ``attempted``, ``failed`` and the
@@ -39,12 +39,15 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORK = os.path.join(ROOT, ".perfbench")
 CORES = 4
-SETUP_REPS = 3
+#: Each set-up starts a JVM (≈7 s) and runs the warm-up (≈2.5–5 s); a third
+#: one does not fit the ≈70 s a run may take next to a 40 s pass.
+SETUP_REPS = 2
 
 #: End-to-end metrics, measured with tracing off.
 END_TO_END = {
     "setup_s": "s",
     "wall_s": "s",
+    "first_pass_s": "s",
 }
 
 #: Per-layer metrics of the traced pass (``op.<name>.wall_s`` come on top).
@@ -88,6 +91,10 @@ def _isolate_scratch() -> None:
     os.environ["SPARK_LOCAL_DIRS"] = local
     # -XX:-UsePerfData: the JVM would otherwise write /tmp/hsperfdata_<user>.
     os.environ["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
+    # collect() renders timestamps in the process time zone; pin it to the
+    # session's (UTC) so collected rows compare with the oracles anywhere.
+    os.environ["TZ"] = "UTC"
+    time.tzset()
 
 
 def _dir_bytes(path: str) -> int:
@@ -124,7 +131,7 @@ def run_traced_pass(spark, workload, input_dir: str, out_dir: str, tracer) -> di
     """One pass with spans, job groups and status-store harvesting."""
     from pyspark.sql import DataFrame
 
-    from perfbench.trace import Py4jCounter
+    from perfbench.trace import FILES_READ, PYTHON_SENT, Py4jCounter
 
     state: dict = {}
     rec = {"ops": {}, "outputs": {}, "errors": {}, "layers": {}}
@@ -161,7 +168,9 @@ def run_traced_pass(spark, workload, input_dir: str, out_dir: str, tracer) -> di
                 lay["build_jobs"] = tracer.jobs(group + ":build")
                 lay["exec_jobs"] = tracer.jobs(group + ":execute")
                 lay["window"] = (e0, e1)
-                lay["python_bytes"] = tracer.python_bytes_sent(first_exec)
+                sizes = tracer.sql_size_metrics(first_exec, (PYTHON_SENT, FILES_READ))
+                lay["python_bytes"] = sizes[PYTHON_SENT]
+                lay["files_read_bytes"] = sizes[FILES_READ]
                 lay["cache_bytes"] = tracer.storage()[0]
                 if op.layer == "sinks":
                     lay["output_bytes"] = _dir_bytes(out_dir)
@@ -212,7 +221,7 @@ def layer_metrics(traced: dict, overhead_s: float, setup: list[dict], op_names: 
             m["exec.shuffle_write_bytes"] += j["shuffle_write_bytes"]
             m["exec.shuffle_read_bytes"] += j["shuffle_read_bytes"]
             m["exec.spill_bytes"] += j["spill_bytes"]
-            m["sources.input_bytes"] += j["input_bytes"]
+        m["sources.input_bytes"] += lay["files_read_bytes"]
         m["python.bytes_sent"] += lay["python_bytes"]
         m["cache.peak_bytes"] = max(m["cache.peak_bytes"], lay["cache_bytes"])
         m["sinks.output_bytes"] += lay.get("output_bytes", 0)
@@ -235,15 +244,11 @@ def layer_metrics(traced: dict, overhead_s: float, setup: list[dict], op_names: 
     return out
 
 
-def steady(passes: list[dict]) -> list[dict]:
-    """The passes after the first; the first alone if it is the only one."""
-    return passes[1:] or passes
-
-
-def end_to_end_metrics(setup: list[dict], passes: list[dict]) -> dict:
+def end_to_end_metrics(setup: list[dict], passes: list[dict], cold_passes: int) -> dict:
     m = {
         "setup_s": statistics.median(s["total_s"] for s in setup),
-        "wall_s": statistics.median(p["wall_s"] for p in steady(passes)),
+        "wall_s": statistics.median(p["wall_s"] for p in passes[cold_passes:]),
+        "first_pass_s": passes[0]["wall_s"],
     }
     return {k: {"value": v, "unit": END_TO_END[k]} for k, v in m.items()}
 
@@ -272,7 +277,8 @@ def jvm_peak_rss_mb(spark) -> float | None:
 
 
 def shutdown(spark) -> None:
-    """Stop the session and the JVM it runs in, and wait for the JVM."""
+    """Stop the session and the JVM it runs in, and wait for the JVM.  The
+    next ``get_spark`` starts a new JVM."""
     from pyspark import SparkContext
 
     gateway = SparkContext._gateway
@@ -281,6 +287,7 @@ def shutdown(spark) -> None:
         return
     proc = getattr(gateway, "proc", None)
     gateway.shutdown()
+    SparkContext._gateway = SparkContext._jvm = None
     if proc is not None:
         proc.stdin.close()
         proc.wait(timeout=60)
@@ -317,7 +324,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = None
     for _ in range(SETUP_REPS):
         if spark is not None:
-            spark.stop()
+            shutdown(spark)
         t0 = time.perf_counter()
         spark = get_spark("perfbench", master=f"local[{CORES}]")
         t1 = time.perf_counter()
@@ -330,18 +337,21 @@ def main(argv: list[str] | None = None) -> int:
     tracer = Tracer(spark, f"{wl.name}-seed{args.seed}") if args.trace else None
     passes: list[dict] = []
     with tracer.span("workload", workload=wl.name) if tracer else contextlib.nullcontext():
-        t0 = time.perf_counter()
-        while len(passes) < wl.min_passes or time.perf_counter() - t0 < args.seconds:
+        steady_s = 0.0
+        while len(passes) <= wl.cold_passes or steady_s < args.seconds:
             if tracer:
                 passes.append(run_traced_pass(spark, wl, input_dir, out_dir, tracer))
             else:
                 passes.append(run_pass(spark, wl, input_dir, out_dir))
+            if len(passes) > wl.cold_passes:
+                steady_s += passes[-1]["wall_s"]
             print(f"perfbench: pass {len(passes)} {passes[-1]['wall_s']:.3f}s", file=sys.stderr)
 
-    problems = wl.check(spark, input_dir, passes)
+    problems = wl.check(spark, input_dir, out_dir, passes)
     attempted, failed = count_failures(passes, problems)
-    record["first_pass_s"] = passes[0]["wall_s"]
-    record["op_p50_s"] = statistics.median(t for p in steady(passes) for t in p["ops"].values())
+    record["op_p50_s"] = statistics.median(
+        t for p in passes[wl.cold_passes:] for t in p["ops"].values()
+    )
 
     if tracer:
         # Per-layer numbers describe the last pass; its span self-times add
@@ -359,7 +369,7 @@ def main(argv: list[str] | None = None) -> int:
         )
         metrics = layer_metrics(passes[-1], overhead, setup, workloads.OP_NAMES_ALL)
     else:
-        metrics = end_to_end_metrics(setup, passes)
+        metrics = end_to_end_metrics(setup, passes, wl.cold_passes)
 
     record.update(
         setup=setup,

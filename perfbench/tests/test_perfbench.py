@@ -39,6 +39,14 @@ def test_warm_inputs_differ_from_timed_inputs(tmp_path):
         assert inputs.digest(timed) != inputs.digest(warm)
 
 
+def test_size_change_regenerates_inputs(tmp_path, monkeypatch):
+    old = inputs.ensure_inputs(str(tmp_path), "ww_pipeline", 3, "warm")
+    monkeypatch.setitem(inputs.WW_ROWS, "warm", (300,))
+    new = inputs.ensure_inputs(str(tmp_path), "ww_pipeline", 3, "warm")
+    assert new != old
+    assert inputs.digest(new) != inputs.digest(old)
+
+
 class _Rows:
     """Stands in for a DataFrame: ``toPandas`` returns fixed rows."""
 
@@ -68,12 +76,56 @@ def test_wrong_result_counts_as_failed_operation(tmp_path, monkeypatch, wrong):
     input_dir = inputs.ensure_inputs(str(tmp_path), "catalog_corpus", 1, "warm")
     monkeypatch.setattr(workloads, "CORPUS_QUERIES", names)
     monkeypatch.setattr(workloads, "QUERIES", _fake_queries(input_dir, names, wrong))
-    problems = workloads.corpus_check(None, input_dir, [])
+    problems = workloads.corpus_check(None, input_dir, "", [])
     passes = [{"ops": dict.fromkeys(names, 0.1), "errors": {}}] * 3
     attempted, failed = run.count_failures(passes, problems)
     assert attempted == 6
     assert failed == (3 if wrong else 0)
     assert bool(problems[names[0]]) == bool(wrong)
+
+
+def _ww_oracles(input_dir: str) -> dict:
+    con = duck_connection(input_dir)
+    return {name: con.execute(sql).fetchdf() for name, sql in workloads.ww_oracle_sqls(input_dir).items()}
+
+
+def _good_ww_pass(oracles: dict) -> dict:
+    """A pass whose outputs are exactly what the oracles expect."""
+    from pyspark.sql import Row
+
+    out = {name: [Row(**r) for r in oracles[name].to_dict("records")] for name in workloads.EP2_ORACLES}
+    ep1 = oracles["engineer_features"]
+    out["model_ready"] = len(ep1.dropna(subset=workloads.MODEL_FEATURES + [workloads.LABEL_COLUMN]))
+    out["run_reference_scenarios"] = [
+        type("R", (), {"model": m, "accuracy": 0.7, "roc_auc": 0.7, "average_precision": 0.6})()
+        for m in sorted(workloads.EP3_MODELS)
+    ]
+    return {"ops": dict.fromkeys(workloads.OP_NAMES["ww_pipeline"], 1.0), "errors": {}, "outputs": out}
+
+
+@pytest.mark.parametrize("wrong", [None, "ep2_monthly_rate", "model_ready", "sink_csv"])
+def test_wrong_pipeline_output_counts_as_failed_operation(tmp_path, wrong):
+    input_dir = inputs.ensure_inputs(str(tmp_path / "in"), "ww_pipeline", 1, "warm")
+    oracles = _ww_oracles(input_dir)
+    assert all(len(f) for f in oracles.values())
+    good, bad = _good_ww_pass(oracles), _good_ww_pass(oracles)
+    ep1 = oracles["engineer_features"]
+    if wrong == "ep2_monthly_rate":
+        row = bad["outputs"][wrong][0].asDict()
+        bad["outputs"][wrong][0] = type(bad["outputs"][wrong][0])(**{**row, "total": row["total"] + 1})
+    elif wrong == "model_ready":
+        bad["outputs"][wrong] -= 1
+    elif wrong == "sink_csv":
+        ep1 = ep1.iloc[1:]
+    sink = tmp_path / "out" / "processed_csv"
+    sink.mkdir(parents=True)
+    ep1.to_csv(sink / "part-00000-x.csv", index=False)
+    problems = workloads.ww_output_problems(oracles, [good, bad], str(tmp_path / "out"))
+    assert sorted(n for n, p in problems.items() if p) == ([wrong] if wrong else [])
+    attempted, failed = run.count_failures([good, bad], problems)
+    assert attempted == 2 * len(workloads.OP_NAMES["ww_pipeline"])
+    # A bad output fails that operation in every pass.
+    assert failed == (2 if wrong else 0)
 
 
 def test_raised_operation_and_bad_ep3_row_count_as_failed():
@@ -97,12 +149,12 @@ def _benchmark_metrics(section: str) -> dict[str, str]:
 
 def _fake_traced(op_names: list[str]) -> dict:
     job = {"start": 1.0, "end": 1.5, "stages": 2, "tasks": 8, "task_s": 1.0, "cpu_s": 0.5,
-           "shuffle_write_bytes": 10, "shuffle_read_bytes": 10, "spill_bytes": 0,
-           "input_bytes": 100}
+           "shuffle_write_bytes": 10, "shuffle_read_bytes": 10, "spill_bytes": 0}
     layers = {
         name: {"layer": layer, "py4j": 3, "plan_s": 0.01, "build_s_raw": 0.1,
                "build_jobs": [], "exec_jobs": [job], "window": (0.9, 2.0),
-               "python_bytes": 5.0, "cache_bytes": 7, "output_bytes": 11}
+               "python_bytes": 5.0, "files_read_bytes": 100.0, "cache_bytes": 7,
+               "output_bytes": 11}
         for name, layer in zip(op_names, ["sources", "features", "ml", "sinks", "plans"] * 9)
     }
     return {"layers": layers, "ops": dict.fromkeys(op_names, 1.1), "wall_s": 9.0,
@@ -112,7 +164,7 @@ def _fake_traced(op_names: list[str]) -> dict:
 def test_printed_metrics_are_declared_with_their_units():
     setup = [{"get_spark_s": 1.0, "warmup_s": 2.0, "total_s": 3.0}] * 3
     passes = [{"wall_s": 5.0, "ops": {"a": 1.0, "b": 2.0}}]
-    e2e = run.end_to_end_metrics(setup, passes)
+    e2e = run.end_to_end_metrics(setup, passes, 0)
     assert {k: v["unit"] for k, v in e2e.items()} == _benchmark_metrics("end_to_end")
     declared = _benchmark_metrics("per_layer")
     for workload in WORKLOAD_NAMES:

@@ -9,7 +9,8 @@ writes them out.
 Jobs are attributed to an operation phase with ``setJobGroup``; job, stage
 and task numbers come from ``statusTracker()`` and the core status store
 (``lastStageAttempt``), which Spark keeps with the UI disabled.  Python
-worker traffic comes from the SQL status store's plan-graph metrics.
+worker traffic and file-scan bytes come from the SQL status store's
+plan-graph metrics.
 Nothing here changes a Spark conf.
 """
 
@@ -22,6 +23,10 @@ import time
 #: The SQL metric of the Python-evaluation plan nodes (ArrowEvalPython,
 #: MapInPandas, ...) that counts the bytes they ship to Python workers.
 PYTHON_SENT = "data sent to Python workers"
+#: The SQL metric of the file-scan nodes (Scan csv, Scan parquet, ...): the
+#: bytes of the files the scan opened.  Reads of persisted blocks have no
+#: such node, so they are not counted.
+FILES_READ = "size of files read"
 _SIZE_UNITS = {"B": 1, "KiB": 2**10, "MiB": 2**20, "GiB": 2**30, "TiB": 2**40}
 
 
@@ -135,7 +140,7 @@ class Tracer:
                 "end": done.get().getTime() / 1000 if done.isDefined() else None,
                 "stages": 0, "tasks": 0, "task_s": 0.0, "cpu_s": 0.0,
                 "shuffle_write_bytes": 0, "shuffle_read_bytes": 0,
-                "spill_bytes": 0, "input_bytes": 0,
+                "spill_bytes": 0,
             }
             ids = job.stageIds()
             for i in range(ids.size()):
@@ -153,18 +158,18 @@ class Tracer:
                 rec["shuffle_write_bytes"] += st.shuffleWriteBytes()
                 rec["shuffle_read_bytes"] += st.shuffleReadBytes()
                 rec["spill_bytes"] += st.diskBytesSpilled()
-                rec["input_bytes"] += st.inputBytes()
             out.append(rec)
         return out
 
-    def python_bytes_sent(self, first_execution: int) -> float:
-        """Bytes sent to Python workers by SQL executions started since
-        ``first_execution`` (an earlier ``sql_execution_count()``)."""
+    def sql_size_metrics(self, first_execution: int, names: tuple[str, ...]) -> dict[str, float]:
+        """Bytes per SQL size metric in ``names``, summed over the plan nodes
+        of the SQL executions started since ``first_execution`` (an earlier
+        ``sql_execution_count()``)."""
+        totals = dict.fromkeys(names, 0.0)
         store = self.spark._jsparkSession.sharedState().statusStore()
         n = int(store.executionsCount()) - first_execution
         if n <= 0:
-            return 0.0
-        total = 0.0
+            return totals
         execs = store.executionsList(first_execution, n)
         for i in range(execs.size()):
             eid = execs.apply(i).executionId()
@@ -174,11 +179,11 @@ class Tracer:
                 metrics = nodes.apply(j).metrics()
                 for k in range(metrics.size()):
                     m = metrics.apply(k)
-                    if m.name() == PYTHON_SENT:
+                    if m.name() in totals:
                         v = values.get(m.accumulatorId())
                         if v.isDefined():
-                            total += parse_size_metric(v.get())
-        return total
+                            totals[m.name()] += parse_size_metric(v.get())
+        return totals
 
     def storage(self) -> tuple[int, int]:
         """(bytes, blocks) currently persisted, from ``getRDDStorageInfo``."""

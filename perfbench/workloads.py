@@ -11,12 +11,14 @@ stages run the action the reference CLI
 
 from __future__ import annotations
 
+import glob
 import math
 import os
 from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Any, Callable
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from cdc_wastewater_analysis_ml_spark.operators import aggregates as A
@@ -76,13 +78,13 @@ def corpus_ops(spark, input_dir: str, out_dir: str, state: dict) -> list[Op]:
 
 def corpus_warmup(spark, warm_dir: str) -> None:
     """One SQL-only query on the small input: the session's first jobs.
-    Set-up runs three times, and warming every query would cost ≈8 s each
-    time, ≈2.5 s of it per Python worker pool; the first timed pass pays
+    Every set-up starts a JVM, and warming every query would add ≈8 s to
+    each, ≈2.5 s of it per Python worker pool; the first timed pass pays
     for the plan shapes and the pools instead."""
     _noop(QUERIES["dedup_exact_text"](spark, warm_dir))
 
 
-def corpus_check(spark, input_dir: str, passes: list[dict]) -> dict[str, list[str]]:
+def corpus_check(spark, input_dir: str, out_dir: str, passes: list[dict]) -> dict[str, list[str]]:
     """Each query's rows against its DuckDB oracle over the same files."""
     oracles = _oracle_frames(input_dir, {n: ORACLES[n] for n in CORPUS_QUERIES})
     return {
@@ -163,8 +165,9 @@ def ww_ops(spark, input_dir: str, out_dir: str, state: dict) -> list[Op]:
 
 def ww_warmup(spark, warm_dir: str) -> None:
     """The CSV scan of the small input: the session's first jobs.  EP1, EP2
-    and MLlib (whose cold start is ≈10 s) are left cold because set-up runs
-    three times; the timed pass pays them, as each run of the CLI does."""
+    and MLlib (whose cold start is ≈10 s) are left cold because every
+    set-up starts a JVM; the timed pass pays them, as each run of the CLI
+    does."""
     scan = ww_ops(spark, warm_dir, warm_dir, {})[0]
     scan.execute(scan.build())
 
@@ -206,22 +209,93 @@ def ep3_problems(results) -> list[str]:
     return problems
 
 
-def ww_check(spark, input_dir: str, passes: list[dict]) -> dict[str, list[str]]:
-    """The engineered table against ``_WW_EP1_SQL`` re-pointed at the same
-    generated rows, and every timed pass's EP3 rows."""
+#: DuckDB versions of the three EP2 aggregates, over ``t7`` — the
+#: engineered table inside ``_WW_EP1_SQL``, before its final projection.
+EP2_ORACLES = {
+    # agg_mean_resampled: Monday-aligned weeks of the sample date.
+    "ep2_weekly_mean": """
+    SELECT date_trunc('week', ts) AS week_start, avg(log_pcr_target_conc) AS avg_value
+    FROM t7 WHERE ts IS NOT NULL GROUP BY 1""",
+    "ep2_monthly_rate": """
+    SELECT collection_month, count(*) AS total,
+           100.0 * avg(CASE WHEN influenza_a_detected = 1 THEN 1 ELSE 0 END) AS detection_rate
+    FROM t7 WHERE collection_month IS NOT NULL GROUP BY 1""",
+    "ep2_top_jurisdictions": """
+    SELECT wwtp_jurisdiction, count(*) AS count FROM t7
+    GROUP BY 1 ORDER BY 2 DESC, 1 ASC NULLS FIRST LIMIT 10""",
+}
+
+
+def ww_oracle_sqls(input_dir: str) -> dict[str, str]:
+    """The DuckDB oracles of the pipeline's stages over the generated rows:
+    the raw table, ``_WW_EP1_SQL`` re-pointed at it, and the EP2 aggregates
+    over the same engineered table."""
+    parquet = os.path.join(input_dir, "wastewater_samples.parquet")
+    ep1 = _WW_EP1_SQL.replace(_WW_FIXTURE, parquet)
+    engineered = ep1[: ep1.rindex("\n    SELECT ")]  # drops the final projection
+    return {
+        "scan_csv": f"SELECT * FROM read_parquet('{parquet}')",
+        "engineer_features": ep1,
+        **{name: engineered + sql for name, sql in EP2_ORACLES.items()},
+    }
+
+
+def _rows_frame(rows) -> pd.DataFrame:
+    return pd.DataFrame([r.asDict() for r in rows])
+
+
+def ww_output_problems(
+    oracles: dict[str, pd.DataFrame], passes: list[dict], out_dir: str
+) -> dict[str, list[str]]:
+    """Each timed pass's outputs against the oracle frames: the collected
+    EP2 rows, the ``model_ready`` count (the engineered rows without a null
+    feature or label), the EP3 rows, and the rows of the last pass's CSV
+    sink (the engineered row count)."""
+    ep1 = oracles["engineer_features"]
+    n_ready = len(ep1.dropna(subset=MODEL_FEATURES + [LABEL_COLUMN]))
+    problems: dict[str, list[str]] = {name: [] for name in EP2_ORACLES}
+    problems["model_ready"] = []
+    for rec in passes:
+        out = rec["outputs"]
+        for name in EP2_ORACLES:
+            if name in out:
+                problems[name] += _guarded(lambda: compare(_rows_frame(out[name]), oracles[name]))
+        if "model_ready" in out and out["model_ready"] != n_ready:
+            problems["model_ready"].append(f"count {out['model_ready']} != {n_ready}")
+    problems["run_reference_scenarios"] = [
+        p for rec in passes for p in ep3_problems(rec["outputs"].get("run_reference_scenarios"))
+    ]
+    problems["sink_csv"] = _guarded(lambda: _sink_problems(out_dir, len(ep1)))
+    return problems
+
+
+def _sink_problems(out_dir: str, n_rows: int) -> list[str]:
+    parts = glob.glob(os.path.join(out_dir, "processed_csv", "part-*.csv"))
+    written = sum(len(pd.read_csv(p)) for p in parts)
+    return [] if written == n_rows else [f"processed_csv has {written} rows, not {n_rows}"]
+
+
+def ww_check(spark, input_dir: str, out_dir: str, passes: list[dict]) -> dict[str, list[str]]:
+    """The scan and the engineered table recomputed and compared with their
+    oracles over the same generated rows, and every pass's other outputs
+    (:func:`ww_output_problems`)."""
     csv = os.path.join(input_dir, "wastewater_samples.csv")
-    sql = _WW_EP1_SQL.replace(_WW_FIXTURE, os.path.join(input_dir, "wastewater_samples.parquet"))
-    oracle = _oracle_frames(input_dir, {"engineer_features": sql})["engineer_features"]
-    eng = _guarded(
-        lambda: compare(
-            _ep1_projection(
-                engineer_features(scan_csv(spark, csv, schema=WASTEWATER_SCHEMA))
-            ).toPandas(),
-            oracle.result(),
-        )
-    )
-    ep3 = [p for rec in passes for p in ep3_problems(rec["outputs"].get("run_reference_scenarios"))]
-    return {"engineer_features": eng, "run_reference_scenarios": ep3}
+    futures = _oracle_frames(input_dir, ww_oracle_sqls(input_dir))
+    scanned = scan_csv(spark, csv, schema=WASTEWATER_SCHEMA)
+    problems = {
+        "scan_csv": _guarded(lambda: compare(scanned.toPandas(), futures["scan_csv"].result())),
+        "engineer_features": _guarded(
+            lambda: compare(
+                _ep1_projection(engineer_features(scanned)).toPandas(),
+                futures["engineer_features"].result(),
+            )
+        ),
+    }
+    try:
+        oracles = {name: f.result() for name, f in futures.items()}
+    except Exception as e:  # noqa: BLE001 — no oracle fails every operation it checks
+        return {**problems, **{n: [f"oracle: {e}"] for n in OP_NAMES["ww_pipeline"]}}
+    return {**problems, **ww_output_problems(oracles, passes, out_dir)}
 
 
 def _guarded(fn: Callable[[], list[str]]) -> list[str]:
@@ -237,16 +311,17 @@ class Workload:
     ops: Callable[..., list[Op]]
     warmup: Callable[..., None]
     check: Callable[..., dict[str, list[str]]]
-    #: Timed passes run at least this often.  ``wall_s`` is the median of
-    #: the passes after the cold first one; a single such pass of
-    #: ``catalog_corpus`` swung 5.7–10.1 s between runs, so it runs two.  A
-    #: ``ww_pipeline`` pass is ≈40 s, so it runs one.
-    min_passes: int
+    #: Passes run before the steady ones ``wall_s`` is the median of.  The
+    #: first ``catalog_corpus`` pass starts its plan shapes and Python
+    #: worker pools (≈16 s against ≈6 s), so it is cold.  A ``ww_pipeline``
+    #: pass is the one-shot CLI run, cold by nature and ≈40 s, so its one
+    #: pass is also its steady pass.
+    cold_passes: int
 
 
 WORKLOADS = {
-    "ww_pipeline": Workload("ww_pipeline", ww_ops, ww_warmup, ww_check, 1),
-    "catalog_corpus": Workload("catalog_corpus", corpus_ops, corpus_warmup, corpus_check, 3),
+    "ww_pipeline": Workload("ww_pipeline", ww_ops, ww_warmup, ww_check, 0),
+    "catalog_corpus": Workload("catalog_corpus", corpus_ops, corpus_warmup, corpus_check, 1),
 }
 
 #: Every operation name per workload (for the per-op metrics).
