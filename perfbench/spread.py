@@ -45,7 +45,7 @@ def main() -> int:
     p = argparse.ArgumentParser()
     p.add_argument("workload")
     p.add_argument("seeds", type=int, nargs="+")
-    p.add_argument("--seconds", type=int, default=10)
+    p.add_argument("--seconds", type=int, default=18)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = p.parse_args()
     results = []

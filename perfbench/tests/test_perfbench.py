@@ -173,6 +173,18 @@ def test_printed_metrics_are_declared_with_their_units():
         assert {k: v["unit"] for k, v in layer.items()} == declared
 
 
+def test_wall_s_sums_per_operation_medians_over_steady_passes():
+    cold = {"wall_s": 20.0, "ops": {"a": 15.0, "b": 5.0}}
+    steady = [
+        {"wall_s": 3.0, "ops": {"a": 1.0, "b": 2.0}},
+        {"wall_s": 7.1, "ops": {"a": 5.0, "b": 2.1}},  # one stalled operation
+        {"wall_s": 3.4, "ops": {"a": 1.2, "b": 2.2}},
+    ]
+    e2e = run.end_to_end_metrics([{"total_s": 1.0}], [cold, *steady], 1)
+    assert e2e["wall_s"]["value"] == pytest.approx(1.2 + 2.1)
+    assert e2e["first_pass_s"]["value"] == 20.0
+
+
 def test_span_self_times_add_up_to_the_root():
     from perfbench.trace import self_times
 
