@@ -122,7 +122,7 @@ _MODULE_CHANGED_IN_ROUND: dict[str, int] = {
     # removed from every CC consumer serial tail (dedup_cluster_cc
     # 24→20 jobs, pipeline_corpus_curation 40→36).  Changed function:
     # connected_components only — consumers = the four CC-routing queries.
-    "operators/dedup.py": 15,
+    "operators/dedup.py": 16,
     "operators/caching.py": 5,
     # r6: chunk_documents rejects stride > chunk_tokens (ADVICE r5 #1 —
     # additive guard; module-granularity rule → whole corpus family, which
@@ -168,7 +168,7 @@ _MODULE_CHANGED_IN_ROUND: dict[str, int] = {
     # pass disappears (shuffle write 6.51→4.51 MB at sf0.1; oracle
     # hash-identical at sf0.001/0.01/0.1).  Changed function: that one
     # builder only.
-    "plans/registry_corpus.py": 15,
+    "plans/registry_corpus.py": 16,
     # r6 session 2 NEW module: two-phase partition-offset global prefix sum
     # (consumed by the new corpus_pack_sequences + corpus_shard_assign).
     "operators/prefix.py": 6,
@@ -220,7 +220,7 @@ _MODULE_CHANGED_IN_ROUND: dict[str, int] = {
     # redundant second full-width exchange of the corpus text at the
     # fixture; plan-only, results partition-invariant).  AST-affected
     # set = _augmented_docs; consumers = every query routing it.
-    "plans/registry_ext.py": 14,
+    "plans/registry_ext.py": 16,
     # r12: pipeline_feature_engineering publishes user_target_mean as the
     # raw avg(0/1) int quotient and feeds the same raw value into
     # interact_v_mean's portable floor-rounding (scheduled
@@ -274,7 +274,7 @@ _MODULE_CHANGED_IN_ROUND: dict[str, int] = {
     # bit-identical (same derivation as the Arrow path; fold order
     # unchanged).  Changed function: rhp_sign only — consumers = queries
     # routing rhp_sign/rhp_signature.
-    "operators/similarity.py": 15,
+    "operators/similarity.py": 16,
     # r15 opt round: tokenize becomes the single-regex form
     # split(trim(lower(x)), '\s+') — value-identical to splitting the
     # normalize_text collapse on single spaces (bit-identity verified on
@@ -286,7 +286,7 @@ _MODULE_CHANGED_IN_ROUND: dict[str, int] = {
     # Column forms (pinned by tests/test_plan_shapes.py).  Module rule: every
     # tokenize/token_count/word_shingles/lang_id consumer re-verifies — no
     # overlay, full route set (47 queries, fits the 50-row prefix).
-    "operators/text.py": 15,
+    "operators/text.py": 16,
     # r7: RUNTIME_CONFS gained canChangeCachedPlanOutputPartitioning=true —
     # a PHYSICAL-layout conf (AQE may coalesce cached-plan output
     # partitions).  Result multisets are partition-layout invariant by house
@@ -346,7 +346,7 @@ _MODULE_CHANGED_IN_ROUND: dict[str, int] = {
     # from the parquet bytes; invalidation strictly widens) — consumer set
     # stays empty, same basis as the r14 entry; regression test pins the
     # in-place-rewrite case.
-    "sources/readers.py": 15,
+    "sources/readers.py": 16,
     # r5: stream_interval_join ADDED (pure function addition, existing ops
     # textually unchanged) — module-granularity rule applied anyway: the
     # whole streaming consumer family re-verifies rather than arguing
@@ -454,6 +454,7 @@ _MODULE_CHANGED_IN_ROUND: dict[str, int] = {
     # (clean-vs-static-store per micro-batch + per-batch counts side-output
     # for the order-independent store refresh).
     "streaming/lines.py": 9,
+    "schema.py": 16,
 }
 # r6 onward: registration is MECHANICAL (VERDICT r5 task 3) — every .py
 # under the package touched since the previous round's driver commit MUST
@@ -547,7 +548,8 @@ _ROUND_AFFECTED: dict[tuple[str, int], tuple[str, ...]] = {
     # minhash family (signatures/banded/candidates/verified/vs_store);
     # every other dedup op is byte-untouched (they re-verify this round
     # anyway via the operators/text.py tokenize entry).
-    ("operators/dedup.py", 15): (
+    ("operators/dedup.py", 16): (
+        "dedup_ngram_jaccard",
         "dedup_cluster_cc",
         "dedup_cluster_best",
         "dedup_embedding_clusters",
@@ -652,7 +654,7 @@ _ROUND_AFFECTED: dict[tuple[str, int], tuple[str, ...]] = {
     # re-verify.
     # r15: the curation builder's text-free kept/pack tail — AST-affected
     # block = that one query.
-    ("plans/registry_corpus.py", 15): ("pipeline_corpus_curation",),
+    ("plans/registry_corpus.py", 16): ("pipeline_corpus_curation",),
     ("streaming/neardup.py", 6): ("stream_dedup_incremental_near",),
     ("plans/registry_stream_ext.py", 7): (
         "stream_dedup_incremental_near",
@@ -740,7 +742,7 @@ _ROUND_AFFECTED: dict[tuple[str, int], tuple[str, ...]] = {
     # fixture, in-module and cross-module.  The r12 metric-conversion
     # queries do not route _augmented_docs and keep their r12/r13 rows
     # (call-path granularity).
-    ("plans/registry_ext.py", 14): (
+    ("plans/registry_ext.py", 16): (
         "dedup_minhash_signatures",
         "dedup_minhash_lsh",
         "dedup_ngram_jaccard",
@@ -766,7 +768,7 @@ _ROUND_AFFECTED: dict[tuple[str, int], tuple[str, ...]] = {
     # r15: rhp_sign/rhp_signature only — consumers = every query routing
     # rhp_signature (incl. the embedding-cluster CC pair generator; the
     # multi-table queries route rhp_signature_arrow, byte-untouched).
-    ("operators/similarity.py", 15): (
+    ("operators/similarity.py", 16): (
         "sim_cosine_lsh",
         "dedup_embedding_cosine_lsh",
         "dedup_embedding_clusters",
@@ -786,8 +788,9 @@ _ROUND_AFFECTED: dict[tuple[str, int], tuple[str, ...]] = {
     # its own module entries).
     # r14: schema-memoization is metadata-only (see the module entry) —
     # empty set.  The r4 ts-reader cohort it replaces re-verified in r5+.
-    ("sources/readers.py", 15): (),
+    ("sources/readers.py", 16): (),
     ("sources/sinks.py", 4): ("scan_json_roundtrip", "scan_orc_roundtrip"),
+    ("schema.py", 16): (),
     # r4 additive: stream_lag_per_key_reordered (+ the TWS variant) are new
     # functions consumed only by the NEW query below (never verified before,
     # so it sorts to the head of the rotation anyway); pre-existing streaming

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..schema import quote_ident
 from ..sources.readers import fan_out
 
 
@@ -109,8 +110,13 @@ def cosine_topk_bruteforce(
     )
 
 
-def rhp_sign(vec: Column, plane: int, dims: int) -> Column:
+def rhp_sign(vec: Column | str, plane: int, dims: int) -> Column:
     """Sign bit of ⟨vec, h_plane⟩ for the md5-derived ±1 hyperplane h.
+
+    ``vec`` is a column NAME (the fast path: the whole expression is
+    rendered as SQL text, the name quoted by :func:`quote_ident`, and
+    parsed in one gateway call) or a Column (built node by node — same
+    plan, more py4j round trips).
 
     r14 (opt): the ±1 coefficients are md5-of-CONSTANTS (``p{plane}:{dim}``)
     — but expressed as a Catalyst ``transform`` lambda they are opaque to
@@ -137,7 +143,7 @@ def rhp_sign(vec: Column, plane: int, dims: int) -> Column:
     signatures stay bit-identical (equivalence pinned by test against the
     Arrow-path derivation)."""
     if isinstance(vec, str):
-        return F.expr(_rhp_sign_sql(f"`{vec}`", plane, dims))
+        return F.expr(_rhp_sign_sql(quote_ident(vec), plane, dims))
     # Column-argument path (API compat): same plan via Column ops.
     coeff = F.expr(
         "array("
@@ -172,14 +178,19 @@ def rhp_signature(
 ) -> DataFrame:
     """Random-hyperplane LSH signature (bit-string of length ``planes``).
 
-    r15 (opt): the concat-of-signs is one ``F.expr`` — 3 gateway calls per
-    signature build instead of ~700 (see :func:`rhp_sign`)."""
+    ``id_col`` and ``vec_col`` are column NAMES: the concat-of-signs is
+    rendered as SQL text over ``quote_ident(vec_col)`` (:func:`rhp_sign`'s
+    str fast path) and parsed as one ``F.expr`` — 3 gateway calls per
+    signature build instead of ~700."""
+    qvec = quote_ident(vec_col)
     sig = F.expr(
         "concat("
-        + ",".join(_rhp_sign_sql(f"`{vec_col}`", p, dims) for p in range(planes))
+        + ",".join(_rhp_sign_sql(qvec, p, dims) for p in range(planes))
         + ")"
     )
-    return df.select(F.col(id_col), F.col(vec_col), sig.alias("rhp_sig"))
+    return df.select(
+        F.col(quote_ident(id_col)), F.col(qvec), sig.alias("rhp_sig")
+    )
 
 
 def cosine_topk_lsh(
@@ -411,8 +422,8 @@ def recall_at_k(truth: DataFrame, approx: dict[str, DataFrame]) -> DataFrame:
                 F.col("hits"),
                 F.col("truth_n"),
                 # Raw IEEE quotient of two exact integers — bit-identical
-                # cross-engine, so no 6dp guard (r11, the integer-quotient
-                # rule; see _verify_jaccard_exploded_hashed).
+                # cross-engine, so no 6dp guard (the integer-quotient rule;
+                # see dedup._verify_jaccard_packed).
                 (F.col("hits") / F.col("truth_n")).alias("recall"),
             )
         )

@@ -15,6 +15,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..schema import quote_ident
+
 
 def normalize_text(c: Column | str) -> Column:
     """Lowercase + collapse internal whitespace + trim: the canonical form
@@ -43,7 +45,7 @@ def tokenize(c: Column | str) -> Column:
     arguments.
     """
     if isinstance(c, str):
-        return F.expr(_tokenize_sql(f"`{c}`"))
+        return F.expr(_tokenize_sql(quote_ident(c)))
     return F.split(F.trim(F.lower(c)), r"\s+")
 
 
@@ -80,7 +82,7 @@ def word_shingles(c: Column | str, n: int = 3) -> Column:
     subtree in the plan exactly like the repeated SQL text does).
     """
     if isinstance(c, str):
-        toks = _tokenize_sql(f"`{c}`")
+        toks = _tokenize_sql(quote_ident(c))
         return F.expr(
             f"transform(sequence(1, greatest(size({toks}) - {n - 1}, 1)), "
             f"i -> array_join(slice({toks}, i, {n}), ' '))"

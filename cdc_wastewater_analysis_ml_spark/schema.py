@@ -82,3 +82,12 @@ POPULATION_BINS = [0.0, 20_000.0, 50_000.0, 200_000.0, float("inf")]
 POPULATION_LABELS = ["Small", "Medium", "Large", "Very Large"]
 
 LABEL_COLUMN = "influenza_a_detected"
+
+
+def quote_ident(name: str) -> str:
+    """Backtick-quote a column name for Spark SQL text and ``F.col``.
+
+    Embedded backticks are doubled, so any legal column name — spaces,
+    dots, non-ASCII, backticks — parses as exactly one identifier and can
+    never inject SQL into a rendered expression."""
+    return "`" + name.replace("`", "``") + "`"

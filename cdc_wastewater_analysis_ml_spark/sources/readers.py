@@ -18,6 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from ..schema import quote_ident
 from ..session import apply_runtime_confs
 
 #: Fixture tables generated by the driver (TESTDATA.md).
@@ -146,7 +147,7 @@ def _normalize_event_time(df: DataFrame, name: str) -> DataFrame:
             continue
         dt = df.schema[c].dataType
         if isinstance(dt, LongType):  # TIMESTAMP(NANOS) read as long
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+            df = df.withColumn(c, F.timestamp_micros(F.expr(f"{quote_ident(c)} div 1000")))
         elif isinstance(dt, TimestampNTZType):  # micros, no UTC flag
             # wall values re-tagged as UTC instants — identical arithmetic
             df = df.withColumn(c, F.col(c).cast("timestamp"))

@@ -301,3 +301,52 @@ def test_get_spark_preserves_a_live_sessions_confs(spark):
     with _warnings.catch_warnings():
         _warnings.simplefilter("error")
         assert get_spark() is spark
+
+
+@pytest.mark.parametrize("name", ["doc`id", "doc id", "döc_id"])
+def test_sql_rendered_ops_accept_odd_identifiers(spark, name):
+    """Operators that render column names into SQL text must quote them
+    through ``quote_ident``: a name with a backtick, a space or non-ASCII
+    letters gives exactly the result of the same call on plain names (a
+    bare backtick wrap let a name like ``doc`id`` break the parse, or
+    inject SQL)."""
+    from cdc_wastewater_analysis_ml_spark.operators import similarity as SIM
+
+    text = "the quick brown fox jumps over the lazy dog"
+    plain = spark.createDataFrame(
+        [
+            (1, text, [1.0, -2.0, 0.5, 3.0]),
+            (2, text + " again", [1.0, -2.0, 0.5, 2.5]),
+            (3, "a wholly different short note", [-1.0, 2.0, -0.5, 0.0]),
+            (4, None, [0.0, 0.0, 1.0, 0.0]),
+        ],
+        "doc_id long, text string, vec array<double>",
+    )
+    odd_cols = [name, name + " text", name + " vec"]
+    odd = plain.toDF(*odd_cols)
+
+    def calls(df, id_col, text_col, vec_col):
+        return {
+            "minhash_signatures": D.minhash_signatures(
+                df, text_col, id_col, num_hashes=4
+            ),
+            "banded_minhash": D.banded_minhash(
+                df, text_col, id_col, num_hashes=4, bands=2
+            ),
+            "minhash_lsh_verified": D.minhash_lsh_verified(
+                df, text_col, id_col, num_hashes=4, bands=2, threshold=0.3
+            ),
+            "word_shingles": df.select(D.word_shingles(text_col, 3).alias("sh")),
+            "rhp_signature": SIM.rhp_signature(
+                df, id_col, vec_col, planes=4, dims=4
+            ),
+        }
+
+    want = calls(plain, "doc_id", "text", "vec")
+    got = calls(odd, *odd_cols)
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    for op, out in got.items():
+        assert rows(out) == rows(want[op]), op
+    assert want["minhash_lsh_verified"].count() > 0

@@ -504,7 +504,7 @@ def test_lsh_verify_packed_digest_arrays(spark, sf_small):
     ``size(array_intersect(...))`` per pair — the exploded-digest plan
     replicated every pair once per shingle through the pair-expansion
     exchange, and the sf10 A/B cut that stage ~3× at bit-identical results
-    (tools/verify_ab.py; 5527→2203 MB, 81→36 s).  The r7 concern (string
+    (5527→2203 MB, 81→36 s).  The r7 concern (string
     arrays compress deceptively → engine-chosen broadcast OOM) is carried
     by two guards the plan must keep: the arrays that reach a join are
     64-bit digests hashed map-side (8 B/element, not 10-40 B strings), and

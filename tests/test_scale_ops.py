@@ -285,6 +285,72 @@ def test_lsh_hot_bucket_guard_adversarial_corpus(spark):
         assert r["candidate_pairs"] == 200 * 199 // 2
 
 
+def _duck_string_jaccard(sf_dir, threshold, pairs=None, shingle_n=3):
+    """Independent oracle: string-keyed shingle-set Jaccard computed by
+    DuckDB over the fixture's ``documents`` — for the candidate ``pairs``
+    (a Spark ``(id_a, id_b)`` frame) or, without pairs, for every doc pair
+    sharing a shingle.  Returns pandas ``(id_a, id_b, jaccard)``."""
+    from cdc_wastewater_analysis_ml_spark.plans.registry_ext import (
+        _shingles_sql_d,
+    )
+    from tools.parity import duck_connection
+
+    con = duck_connection(sf_dir)
+    if pairs is None:
+        inter = (
+            "SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter "
+            "FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id "
+            "GROUP BY 1, 2"
+        )
+    else:
+        con.register("cand", pairs.select("id_a", "id_b").toPandas())
+        inter = (
+            "SELECT c.id_a, c.id_b, count(*) AS inter FROM cand c "
+            "JOIN sh a ON a.doc_id = c.id_a "
+            "JOIN sh b ON b.doc_id = c.id_b AND b.sh = a.sh GROUP BY 1, 2"
+        )
+    return con.execute(
+        f"""
+        WITH sh AS (SELECT d.doc_id,
+                           unnest(list_distinct({_shingles_sql_d(shingle_n)})) AS sh
+                    FROM documents d),
+             sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
+             inter AS ({inter})
+        SELECT id_a, id_b, inter::DOUBLE / (sa.sz + sb.sz - inter) AS jaccard
+        FROM inter
+        JOIN sizes sa ON sa.doc_id = id_a
+        JOIN sizes sb ON sb.doc_id = id_b
+        WHERE inter::DOUBLE / (sa.sz + sb.sz - inter) >= {threshold}
+        """
+    ).df()
+
+
+def _assert_matches_oracle(got, want):
+    from tools.parity import compare
+
+    got = got.select("id_a", "id_b", "jaccard").toPandas()
+    assert compare(got, want) == [] and len(got) > 0
+
+
+def _shingle_sets(docs, shingle_n=3):
+    """The verify plans' ``(doc_id, __shs)`` input, persisted."""
+    return docs.select(
+        F.col("doc_id"),
+        F.array_distinct(D.word_shingles("text", shingle_n)).alias("__shs"),
+    ).persist()
+
+
+def _size_annotated(sh, pairs):
+    """Annotate ``(id_a, id_b)`` pairs with both docs' distinct shingle-set
+    sizes ``__na``/``__nb`` — the oriented verify's input contract."""
+    n = sh.select(F.col("doc_id"), F.size("__shs").alias("n"))
+    return pairs.join(
+        n.select(F.col("doc_id").alias("id_a"), F.col("n").alias("__na")), "id_a"
+    ).join(
+        n.select(F.col("doc_id").alias("id_b"), F.col("n").alias("__nb")), "id_b"
+    )
+
+
 def test_fused_lsh_verified_matches_two_stage_composition(spark, sf_small):
     """minhash_lsh_verified (one staged shingle pass, r6) must return the
     exact pair set + jaccard values of the two-operator composition it
@@ -300,25 +366,16 @@ def test_fused_lsh_verified_matches_two_stage_composition(spark, sf_small):
 
 
 def test_lsh_verified_digest_verify_matches_string_verify(spark, sf_small):
-    """hash_verify_shingles narrows the verify-stage join keys to 64-bit
-    xxhash64 digests — a shuffle-bytes optimization (r8 VERDICT task 2)
-    that must leave the pair set and every Jaccard value bit-identical on
-    any real corpus (collisions are ~2^-65 per shingle pair; on this
-    fixture there are none, so strict equality is the contract)."""
+    """The fused operator's digest-keyed, size-prefiltered, oriented verify
+    must leave the pair set and every Jaccard value equal to a string-keyed
+    Jaccard over the same LSH candidates (collisions are ~2^-65 per
+    shingle pair; on this fixture there are none).  Oracle: DuckDB."""
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    string_keyed = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in D.minhash_lsh_verified(
-            docs, "text", "doc_id", threshold=0.3, hash_verify_shingles=False
-        ).collect()
-    }
-    digest_keyed = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in D.minhash_lsh_verified(
-            docs, "text", "doc_id", threshold=0.3, hash_verify_shingles=True
-        ).collect()
-    }
-    assert digest_keyed == string_keyed and len(digest_keyed) > 0
+    cand = D.minhash_lsh_candidates(docs, "text", "doc_id")
+    _assert_matches_oracle(
+        D.minhash_lsh_verified(docs, "text", "doc_id", threshold=0.3),
+        _duck_string_jaccard(sf_small, 0.3, cand),
+    )
 
 
 def test_lsh_verified_digest_verify_hashes_before_exchange(spark, sf_small):
@@ -331,9 +388,7 @@ def test_lsh_verified_digest_verify_hashes_before_exchange(spark, sf_small):
     xxhash64 appears in the same whole-stage-codegen subtree as the
     generate (explode), i.e. between Generate and the first Exchange."""
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    out = D.minhash_lsh_verified(
-        docs, "text", "doc_id", threshold=0.3, hash_verify_shingles=True
-    )
+    out = D.minhash_lsh_verified(docs, "text", "doc_id", threshold=0.3)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "xxhash64" in plan
     # every xxhash64 projection is computed directly over the generated
@@ -356,35 +411,21 @@ def test_lsh_verified_digest_verify_hashes_before_exchange(spark, sf_small):
 
 
 def test_packed_verify_matches_exploded_and_string(spark, sf_small):
-    """r11 (VERDICT r10 task 3): the packed-array digest verify — adopted
-    after the sf10 A/B cut the dominant pair-expansion exchange ~3×
-    (tools/verify_ab.py; numbers in DEVNOTES/PROBE_r11) — must produce the
-    SAME pair set and bit-identical raw-quotient Jaccard values as both the
-    exploded-digest plan and the byte-exact string plan."""
+    """The packed-array digest verify must produce the SAME pair set and
+    Jaccard values as an exploded, string-keyed verify of the same
+    candidates.  Oracle: DuckDB's (doc, shingle-string) equi-join."""
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-
-    def run(impl):
-        old = D._HASHED_VERIFY_IMPL
-        D._HASHED_VERIFY_IMPL = impl
-        try:
-            return {
-                (r.id_a, r.id_b): r.jaccard
-                for r in D.minhash_lsh_verified(
-                    docs, "text", "doc_id", threshold=0.3
-                ).collect()
-            }
-        finally:
-            D._HASHED_VERIFY_IMPL = old
-
-    packed = run(D._verify_jaccard_packed)
-    exploded = run(D._verify_jaccard_exploded_hashed)
-    string_keyed = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in D.minhash_lsh_verified(
-            docs, "text", "doc_id", threshold=0.3, hash_verify_shingles=False
-        ).collect()
-    }
-    assert packed == exploded == string_keyed and len(packed) > 0
+    sh = _shingle_sets(docs)
+    cand = D.minhash_lsh_candidates(docs, "text", "doc_id")
+    try:
+        _assert_matches_oracle(
+            D._verify_jaccard_packed(
+                sh, cand, "doc_id", 0.3, reduce_a=False, reduce_b=False
+            ),
+            _duck_string_jaccard(sf_small, 0.3, cand),
+        )
+    finally:
+        sh.unpersist()
 
 
 def test_packed_verify_drops_zero_intersection_pairs(spark):
@@ -497,25 +538,15 @@ def test_freqitems_gate_excludes_exact_support_boundary(spark, tmp_path):
 
 
 def test_ngram_jaccard_digest_matches_string_keys(spark, sf_small):
-    """r11 (VERDICT r10 task 1): ngram_jaccard_pairs self-joins on 64-bit
-    xxhash64 shingle digests by default — the last string-keyed shuffle in
-    the dedup family.  The pair set and every raw-quotient Jaccard value
-    must be bit-identical to the string-keyed opt-out on any real corpus
-    (collisions ~2^-65 per shingle pair; none on this fixture)."""
+    """ngram_jaccard_pairs self-joins on 64-bit xxhash64 shingle digests.
+    The pair set and every raw-quotient Jaccard value must equal a
+    string-keyed all-pairs Jaccard (collisions ~2^-65 per shingle pair;
+    none on this fixture).  Oracle: DuckDB."""
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    string_keyed = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in D.ngram_jaccard_pairs(
-            docs, "text", "doc_id", threshold=0.2, hash_verify_shingles=False
-        ).collect()
-    }
-    digest_keyed = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in D.ngram_jaccard_pairs(
-            docs, "text", "doc_id", threshold=0.2, hash_verify_shingles=True
-        ).collect()
-    }
-    assert digest_keyed == string_keyed and len(digest_keyed) > 0
+    _assert_matches_oracle(
+        D.ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.2),
+        _duck_string_jaccard(sf_small, 0.2),
+    )
 
 
 def test_ngram_jaccard_digest_null_text_never_pairs(spark):
@@ -537,28 +568,21 @@ def test_ngram_jaccard_digest_null_text_never_pairs(spark):
         "doc_id long, text string",
     )
     rows = D.ngram_jaccard_pairs(
-        docs, "text", "doc_id", threshold=0.1, hash_verify_shingles=True
+        docs, "text", "doc_id", threshold=0.1
     ).collect()
     assert {(r.id_a, r.id_b) for r in rows} == {(4, 5)}
     assert rows[0].jaccard == 1.0
 
 
 def test_verify_null_text_never_pairs(spark):
-    """r12 ADVICE: the digest VERIFY implementations must not pair
-    null-text docs either.  word_shingles(null text) yields ``[NULL]``;
-    xxhash64 SKIPS null args and returns the bare seed hash, so an
-    unguarded digest (exploded) or digest ARRAY (packed — and there
-    ``array_intersect`` even matches NULL elements, unlike an equi-join)
-    would publish jaccard=1.0 for user-supplied pairs of null-text docs
-    where the byte-exact string plan returns nothing.  LSH registry
-    queries never hit this (null docs band-match nothing), but
-    :func:`jaccard_verify_pairs` takes CALLER-supplied pairs."""
-    from cdc_wastewater_analysis_ml_spark.operators.dedup import (
-        _verify_jaccard_exploded_hashed,
-        _verify_jaccard_packed,
-        word_shingles,
-    )
-
+    """The digest VERIFY must not pair null-text docs.  word_shingles(null
+    text) yields ``[NULL]``; xxhash64 SKIPS null args and returns the bare
+    seed hash, so an unguarded digest ARRAY (where ``array_intersect`` even
+    matches NULL elements, unlike an equi-join) would publish jaccard=1.0
+    for user-supplied pairs of null-text docs, where a string-keyed verify
+    returns nothing.  LSH registry queries never hit this (null docs
+    band-match nothing), but :func:`jaccard_verify_pairs` takes
+    CALLER-supplied pairs."""
     docs = spark.createDataFrame(
         [
             (1, None),
@@ -573,91 +597,53 @@ def test_verify_null_text_never_pairs(spark):
         [(1, 2), (1, 3), (2, 3), (4, 5)], "id_a long, id_b long"
     )
     expected = {(4, 5): 1.0}
-    # Operator level, both seam settings: identical to the string plan.
-    for hashed in (True, False):
+    got = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in D.jaccard_verify_pairs(
+            docs, pairs, "text", "doc_id", threshold=0.1
+        ).collect()
+    }
+    assert got == expected, got
+    sh = _shingle_sets(docs)
+    try:
         got = {
             (r.id_a, r.id_b): r.jaccard
-            for r in D.jaccard_verify_pairs(
-                docs, pairs, "text", "doc_id",
-                threshold=0.1, hash_verify_shingles=hashed,
+            for r in D._verify_jaccard_packed(
+                sh, pairs, "doc_id", 0.1, reduce_a=False, reduce_b=False
             ).collect()
         }
-        assert got == expected, f"hash_verify_shingles={hashed}: {got}"
-    # Both hashed impls directly (the seam hides whichever isn't default).
-    sh = docs.select(
-        F.col("doc_id"),
-        F.array_distinct(word_shingles("text", 3)).alias("__shs"),
-    ).persist()
-    try:
-        for impl in (_verify_jaccard_packed, _verify_jaccard_exploded_hashed):
-            got = {
-                (r.id_a, r.id_b): r.jaccard
-                for r in impl(
-                    sh, pairs, "doc_id", 0.1, reduce_a=False, reduce_b=False
-                ).collect()
-            }
-            assert got == expected, f"{impl.__name__}: {got}"
+        assert got == expected, got
     finally:
         sh.unpersist()
 
 
-def test_lsh_candidates_with_sizes_annotation_is_exact(spark, sf_small):
-    """with_sizes=True must (a) leave the pair SET identical to the default
-    schema and (b) annotate each pair with exactly the verify-side distinct
-    shingle-set sizes (the prefilter/orientation contract)."""
-    from cdc_wastewater_analysis_ml_spark.operators.dedup import word_shingles
-
-    docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    plain = {
-        (r.id_a, r.id_b)
-        for r in D.minhash_lsh_candidates(docs, "text", "doc_id").collect()
-    }
-    sized_rows = D.minhash_lsh_candidates(
-        docs, "text", "doc_id", with_sizes=True
-    ).collect()
-    assert {(r.id_a, r.id_b) for r in sized_rows} == plain and len(plain) > 0
-    sizes = {
-        r.doc_id: r.n
-        for r in docs.select(
-            "doc_id",
-            F.size(F.array_distinct(word_shingles("text", 3))).alias("n"),
-        ).collect()
-    }
-    for r in sized_rows:
-        # Row attribute access rejects dunder names; use item access.
-        assert r["__na"] == sizes[r.id_a] and r["__nb"] == sizes[r.id_b], r
-
-
 def test_oriented_verify_matches_all_plans(spark, sf_small):
-    """r12 (DEVNOTES r11 design (b)): the size-annotated oriented verify —
-    smaller-side pair expansion + size-ratio prefilter — must be a pure
-    plan optimization: identical pair set and bit-identical raw-quotient
-    jaccard values as the unoriented packed seam AND the exploded-hashed
-    reference, through the full fused operator."""
-    import cdc_wastewater_analysis_ml_spark.operators.dedup as DD
-
+    """The size-annotated oriented verify — smaller-side pair expansion —
+    and the size-ratio prefilter must be pure plan optimizations: the same
+    pair set and Jaccard values as the unoriented packed verify and as the
+    string-keyed DuckDB oracle over the same candidates."""
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
+    sh = _shingle_sets(docs)
+    cand = D.minhash_lsh_candidates(docs, "text", "doc_id")
+    sized = _size_annotated(sh, cand)
 
-    def run():
-        return sorted(
-            (r.id_a, r.id_b, r.jaccard)
-            for r in DD.minhash_lsh_verified(
-                docs, "text", "doc_id", threshold=0.3
-            ).collect()
-        )
+    def pairs(df):
+        return sorted((r.id_a, r.id_b, r.jaccard) for r in df.collect())
 
-    oriented = run()
-    assert len(oriented) > 0
     try:
-        DD._ORIENT_SIZED_VERIFY = False
-        unoriented = run()
-        DD._HASHED_VERIFY_IMPL = DD._verify_jaccard_exploded_hashed
-        DD._ORIENT_SIZED_VERIFY = True  # no-op off the packed seam
-        exploded = run()
+        oriented = D._verify_jaccard_packed_oriented(sh, sized, "doc_id", 0.3)
+        prefiltered = D._verify_jaccard_packed_oriented(
+            sh, D._size_ratio_prefilter(sized, 0.3), "doc_id", 0.3
+        )
+        unoriented = D._verify_jaccard_packed(
+            sh, cand, "doc_id", 0.3, reduce_a=False, reduce_b=False
+        )
+        assert pairs(oriented) == pairs(prefiltered) == pairs(unoriented)
+        _assert_matches_oracle(
+            oriented, _duck_string_jaccard(sf_small, 0.3, cand)
+        )
     finally:
-        DD._ORIENT_SIZED_VERIFY = True
-        DD._HASHED_VERIFY_IMPL = DD._verify_jaccard_packed
-    assert oriented == unoriented == exploded
+        sh.unpersist()
 
 
 def test_oriented_verify_null_text_and_asymmetric_sizes(spark):
@@ -731,8 +717,7 @@ def test_lsh_verified_semijoin_reduction_matches_unreduced(spark, sf_small):
     verify.  Driven through the helper with a persisted candidate
     relation, per its contract."""
     from cdc_wastewater_analysis_ml_spark.operators.dedup import (
-        _bands_from_sig,
-        _verify_jaccard_exploded_hashed,
+        _verify_jaccard_packed,
         word_shingles,
     )
     from cdc_wastewater_analysis_ml_spark.sources import fan_out
@@ -747,13 +732,13 @@ def test_lsh_verified_semijoin_reduction_matches_unreduced(spark, sf_small):
     try:
         reduced = {
             (r.id_a, r.id_b): r.jaccard
-            for r in _verify_jaccard_exploded_hashed(
+            for r in _verify_jaccard_packed(
                 sh, pairs, "doc_id", 0.3, reduce_a=True, reduce_b=True
             ).collect()
         }
         plain = {
             (r.id_a, r.id_b): r.jaccard
-            for r in _verify_jaccard_exploded_hashed(
+            for r in _verify_jaccard_packed(
                 sh, pairs, "doc_id", 0.3, reduce_a=False, reduce_b=False
             ).collect()
         }
@@ -763,7 +748,7 @@ def test_lsh_verified_semijoin_reduction_matches_unreduced(spark, sf_small):
         # stores) must be the same pure plan optimization.
         a_only = {
             (r.id_a, r.id_b): r.jaccard
-            for r in _verify_jaccard_exploded_hashed(
+            for r in _verify_jaccard_packed(
                 sh, pairs, "doc_id", 0.3, reduce_a=True, reduce_b=False
             ).collect()
         }
@@ -774,23 +759,17 @@ def test_lsh_verified_semijoin_reduction_matches_unreduced(spark, sf_small):
 
 
 def test_jaccard_verify_pairs_digest_matches_string_verify(spark, sf_small):
-    """r10 adoption: jaccard_verify_pairs now defaults to the digest-keyed
-    verify — pair set and every Jaccard value must stay bit-identical to
-    the byte-exact string-keyed plan (hash_verify_shingles=False)."""
+    """jaccard_verify_pairs' digest-keyed verify: pair set and every
+    Jaccard value must equal a string-keyed verify of the same candidates.
+    Oracle: DuckDB."""
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-
-    def run(hashed):
-        pairs = D.minhash_lsh_candidates(docs, "text", "doc_id")
-        return {
-            (r.id_a, r.id_b): r.jaccard
-            for r in D.jaccard_verify_pairs(
-                docs, pairs, "text", "doc_id", threshold=0.3,
-                assume_distinct=True, hash_verify_shingles=hashed,
-            ).collect()
-        }
-
-    digest_keyed, string_keyed = run(True), run(False)
-    assert digest_keyed == string_keyed and len(digest_keyed) > 0
+    cand = D.minhash_lsh_candidates(docs, "text", "doc_id")
+    _assert_matches_oracle(
+        D.jaccard_verify_pairs(
+            docs, cand, "text", "doc_id", threshold=0.3, assume_distinct=True
+        ),
+        _duck_string_jaccard(sf_small, 0.3, cand),
+    )
 
 
 def test_estimated_bytes_connect_fallback():
@@ -1033,16 +1012,14 @@ def test_adaptive_verify_gates_on_distinct_ids_per_side(spark, monkeypatch):
     sides off) but a 1-element id_a set, so side A must engage while the
     unselective side B (60 ids > half the docs) stays off."""
     captured = {}
-    real = D._HASHED_VERIFY_IMPL
+    real = D._verify_jaccard_packed
 
     def spy(sh, pairs, id_col, threshold, *, reduce_a, reduce_b):
         captured["flags"] = (reduce_a, reduce_b)
         return real(sh, pairs, id_col, threshold,
                     reduce_a=reduce_a, reduce_b=reduce_b)
 
-    # The gate dispatches through the r11 A/B seam — spy the seam, so the
-    # pin holds regardless of which verify implementation is adopted.
-    monkeypatch.setattr(D, "_HASHED_VERIFY_IMPL", spy)
+    monkeypatch.setattr(D, "_verify_jaccard_packed", spy)
     sh = spark.createDataFrame(
         [(i, [f"s{i}", "common"]) for i in range(100)],
         "doc_id long, __shs array<string>",
@@ -1062,77 +1039,17 @@ def test_adaptive_verify_gates_on_distinct_ids_per_side(spark, monkeypatch):
     assert gates([(a, a + 1) for a in range(1, 61)]) == (False, False)
 
 
-def test_sized_verify_shingle_n_contract(spark, sf_small):
-    """ADVICE r12: the sized verify must not trust __na/__nb on column
-    presence alone.  Generator-stamped annotations at a MISMATCHED
-    shingle_n raise; annotations WITHOUT the metadata stamp are stripped
-    (warned) and the result equals the unsized plan; the matching stamped
-    path stays live."""
-    import warnings
-
-    import pytest as _pytest
-
-    docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    sized = D.minhash_lsh_candidates(docs, "text", "doc_id", with_sizes=True)
-
-    # (a) generator/verify width mismatch fails loudly.
-    with _pytest.raises(ValueError, match="shingle_n"):
-        D.jaccard_verify_pairs(
-            docs, sized, "text", "doc_id", shingle_n=4, assume_distinct=True
-        )
-
-    # (b) matching width: live and identical to the unsized reference.
-    ref = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in D.jaccard_verify_pairs(
-            docs,
-            sized.drop("__na", "__nb"),
-            "text",
-            "doc_id",
-            assume_distinct=True,
-        ).collect()
-    }
-    got = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in D.jaccard_verify_pairs(
-            docs, sized, "text", "doc_id", assume_distinct=True
-        ).collect()
-    }
-    assert got == ref and len(ref) > 0
-
-    # (c) unstamped caller columns: warned, stripped, unsized result.
-    bare = sized.withColumn("__na", F.col("__na") + 0).withColumn(
-        "__nb", F.col("__nb") + 0
-    )  # arithmetic drops the alias metadata stamp
-    assert bare.schema["__na"].metadata.get("spark_graft.shingle_n") is None
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        stripped = {
-            (r.id_a, r.id_b): r.jaccard
-            for r in D.jaccard_verify_pairs(
-                docs, bare, "text", "doc_id", assume_distinct=True
-            ).collect()
-        }
-    assert any("metadata stamp" in str(x.message) for x in w)
-    assert stripped == ref
-
-
 def test_oriented_prepart_layout_plan_and_equivalence(spark, sf_small):
     """r13 (VERDICT r12 task 3, lever B): with prepart=True the oriented
     verify must (a) return exactly the prepart=False result, and (b) plan
     ONE repartition exchange of the packed digest relation feeding BOTH
     expansion joins through the cache's alias-propagated partitioning —
     never a second array-relation exchange (the layout's whole point)."""
-    from cdc_wastewater_analysis_ml_spark.operators.text import word_shingles
-
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
+    sh = _shingle_sets(docs)
     sized = D._size_ratio_prefilter(
-        D.minhash_lsh_candidates(docs, "text", "doc_id", with_sizes=True), 0.3
+        _size_annotated(sh, D.minhash_lsh_candidates(docs, "text", "doc_id")), 0.3
     )
-    sh = docs.select(
-        F.col("doc_id"),
-        F.array_distinct(word_shingles("text", 3)).alias("__shs"),
-    ).persist()
     try:
         ref = {
             (r.id_a, r.id_b): r.jaccard
